@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import functools
 import math
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -41,6 +40,10 @@ from market_data_pipeline_spark.operators import (
 )
 from market_data_pipeline_spark.operators.analytics import fp_sum
 from market_data_pipeline_spark.operators.setops import union_relaxed
+from market_data_pipeline_spark.session import (
+    clear_frame_caches,  # noqa: F401 — public here, callers use dq.clear_frame_caches
+    memo,
+)
 from market_data_pipeline_spark.sources.catalog import (
     ensure_session_defaults,
     load_table,
@@ -109,23 +112,21 @@ def price_frame(
     # tests flipped the zone — r11)
     ensure_session_defaults(spark)
     if symbols is not None:
-        _purge_dead_sessions(_PRICE_PLAN_CACHE)
-        pkey = (spark, sf_dir, tuple(symbols))
-        plan = _PRICE_PLAN_CACHE.pop(pkey, None)
-        if plan is None:
-            plan = _price_agg(spark, sf_dir, symbols)
-        _PRICE_PLAN_CACHE[pkey] = plan
-        _bound_cache(_PRICE_PLAN_CACHE, max_entries=16)
-        return plan
-    _purge_dead_sessions(_PRICE_CACHE)
-    key = (spark, sf_dir)
-    # pop-and-reinsert: a hit refreshes LRU recency (dict order)
-    frame = _PRICE_CACHE.pop(key, None)
-    if frame is None:
-        frame = _price_agg(spark, sf_dir, None).localCheckpoint(eager=False)
-    _PRICE_CACHE[key] = frame
-    _bound_cache(_PRICE_CACHE)
-    return frame
+        # plan only, no checkpoint: an evicted plan costs just a rebuild,
+        # so this memo keeps more entries than the staged frames
+        return memo(
+            "price_plan",
+            spark,
+            (sf_dir, tuple(symbols)),
+            lambda: _price_agg(spark, sf_dir, symbols),
+            cap=16,
+        )
+    return memo(
+        "price",
+        spark,
+        (sf_dir,),
+        lambda: _price_agg(spark, sf_dir, None).localCheckpoint(eager=False),
+    )
 
 
 def _price_agg(
@@ -162,122 +163,6 @@ def _price_agg(
     )
 
 
-_PRICE_CACHE: dict = {}
-# (session, sf_dir, symbols-tuple) -> lazy filtered-price PLAN (r12).
-# Holds no checkpoint/data — eviction or clearing only costs a rebuild.
-_PRICE_PLAN_CACHE: dict = {}
-
-
-_FRAME_CACHE_MAX_DIRS = 4  # sf_dirs kept PER SESSION per cache; LRU eviction
-
-# Eviction releases only the PYTHON REFERENCE — deliberately. Dropping
-# the dict entry releases the last strong ref to the checkpointed frame;
-# Spark's ContextCleaner then unpersists the weak-reachable RDD blocks
-# on the next driver GC (<= 15s away under the session default). A
-# forced unpersist here would be either a no-op (queryExecution().toRdd()
-# on a checkpointed Dataset returns a DERIVED wrapper, not the persisted
-# internal RDD — r11 review) or unsafe (the internal RDD may still back
-# an unmaterialized dependent frame, e.g. a cached returns_frame built
-# on an evicted price_frame; reference-tracked cleanup can never free
-# blocks something still points at).
-
-
-def _purge_dead_sessions(cache: dict) -> None:
-    """Evict cache entries keyed by a stopped SparkSession — a process
-    that creates several sessions over its lifetime (test harnesses,
-    in-process driver restarts) must not accumulate checkpointed frames
-    of dead sessions (r10 review). Runs BEFORE the cache lookup: a dead
-    entry must never be served, and purging after the lookup turned a
-    stopped-session call into a bare KeyError (r11 review). Cheap: the
-    caches hold a handful of keys."""
-    for key in list(cache):
-        sess = key[0]
-        try:
-            dead = sess.sparkContext._jsc is None
-        except Exception:
-            dead = True
-        if dead:
-            del cache[key]
-
-
-def _bound_cache(cache: dict, max_entries: int | None = None) -> None:
-    """Bound live entries to ``max_entries`` (default
-    ``_FRAME_CACHE_MAX_DIRS``) PER SESSION, evicting least-recently-used
-    first (hits refresh recency by re-inserting the key) — one
-    long-lived session touching many directories (sweep clones,
-    tmp_path tests) must not accumulate a checkpoint per directory (r10
-    advice), and one session's churn must not evict another live
-    session's hot frame (r11 review). Runs AFTER insertion so the bound
-    holds at return. Plan-only caches (no checkpoint blocks behind the
-    entries) pass a higher cap — an evicted plan only costs a rebuild,
-    but the r12 plan memos exist precisely to avoid those rebuilds."""
-    cap = _FRAME_CACHE_MAX_DIRS if max_entries is None else max_entries
-    per_sess: dict = {}
-    for key in cache:
-        per_sess.setdefault(id(key[0]), []).append(key)
-    for keys in per_sess.values():
-        for key in keys[: max(0, len(keys) - cap)]:
-            del cache[key]
-
-
-def clear_frame_caches() -> None:
-    """Drop the memoized derived-frame checkpoints (price_frame,
-    returns_frame). The caches assume the source tables under a given
-    (session, sf_dir) are IMMUTABLE — true for the driver gate, bench,
-    and sweeps (each adversarial clone gets its own directory), false
-    for property tests that rewrite a tmp_path table between hypothesis
-    examples. Any test that rewrites a table it already queried must
-    call this (found the hard way in r10: a stale staged price frame
-    served example 1's lineitem to example 2). Dropping the references
-    is the whole release — see the eviction note above _purge_dead_sessions."""
-    _PRICE_CACHE.clear()
-    _RETURNS_CACHE.clear()
-    _TS_SERIES_CACHE.clear()
-    _MASTER_CACHE.clear()
-    _PRICE_PLAN_CACHE.clear()
-
-
-# r13 VERDICT #8: a query's CLOSING global sort is presentation order
-# only — the driver's recorder canonicalizes by sorting the collected
-# row tuples itself before comparing/hashing (scripts/check_oracle.py
-# is the replica, and the mm6 recording crash trace shows the driver's
-# pandas sort_values running over the full result), so a root Sort buys
-# determinism nobody consumes and costs a range exchange (a
-# boundary-sampling pass + a shuffle) per query: ~60-70 ms each where
-# the child plan ends in a shuffle, and a FULL re-execution of the
-# child where it does not (the materialize_then_sort class). The @query
-# decorator therefore elides the plan-ROOT Sort from every registered
-# query (see _strip_root_sort); set SPARK_GRAFT_SORTED_OUTPUT=1 to
-# restore globally sorted output for human consumers (every sort key is
-# kept at its call site, so the flag restores the exact r12 surface).
-_SORTED_OUTPUT = os.environ.get("SPARK_GRAFT_SORTED_OUTPUT", "") == "1"
-
-
-def materialize_then_sort(df, *keys):
-    """Cut lineage before a FINAL global sort whose child plan contains
-    no shuffle (map-only or broadcast-only upstream): the range
-    exchange's boundary-sampling pass re-EXECUTES the sort's child, and
-    with no shuffle files below it to reuse, the entire pipeline runs
-    TWICE per action (r12 opt session-3 walk census — every flagged
-    single-call-site 2.0x query whose plan had exactly one Exchange was
-    this shape; tx9 measured 1.39 -> 0.82 s isolated with the cut). The
-    lazy localCheckpoint materializes the child once; sampling and the
-    sort both read its blocks. Queries whose plan already ends in a
-    shuffle do NOT need this — their sampling pass reuses shuffle files
-    (which is why the final orderBy only costs ~60-70 ms there).
-
-    r13: when declared_sort drops the closing sort (the default), there
-    is no sampling pass to protect against, so the checkpoint is
-    skipped too — the full plan is visible to audits again (r12 verdict
-    #5's blind spot) and the checkpoint's write cost disappears."""
-    if not _SORTED_OUTPUT:
-        return df
-    return df.localCheckpoint(eager=False).orderBy(*keys)
-
-
-_RETURNS_CACHE: dict = {}
-
-
 def returns_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized per-symbol 1-day-return frame: ``price_frame`` (non-null
     closes) plus ``ret`` = close/prev_close - 1 over the per-series lag
@@ -289,18 +174,15 @@ def returns_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes once on first action and later queries read its blocks
     (the ``_symbol_totals``-reuse pattern r9 measured at 2x)."""
     ensure_session_defaults(spark)  # cache-hit path skips load_table
-    _purge_dead_sessions(_RETURNS_CACHE)
-    key = (spark, sf_dir)
-    frame = _RETURNS_CACHE.pop(key, None)  # hit refreshes LRU recency
-    if frame is None:
+
+    def build():
         p = price_frame(spark, sf_dir).filter(F.col("close_price").isNotNull())
         w = Window.partitionBy("symbol").orderBy("trade_date")
-        frame = p.withColumn(
+        return p.withColumn(
             "ret", F.col("close_price") / F.lag("close_price").over(w) - 1
         ).localCheckpoint(eager=False)
-    _RETURNS_CACHE[key] = frame
-    _bound_cache(_RETURNS_CACHE)
-    return frame
+
+    return memo("returns", spark, (sf_dir,), build)
 
 
 def index_returns_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -336,9 +218,6 @@ price AS (
 )"""
 
 
-_MASTER_CACHE: dict = {}
-
-
 def master_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symbol dimension derived from part, with deterministic
     listing/delisting attributes mirroring stock_master
@@ -350,18 +229,12 @@ def master_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds the lazy plan only (no checkpoint, no data): execution and
     column pruning behave exactly as a fresh build (r12, guide §1.2)."""
     ensure_session_defaults(spark)
-    _purge_dead_sessions(_MASTER_CACHE)
-    ckey = (spark, sf_dir)
-    hit = _MASTER_CACHE.pop(ckey, None)
-    if hit is not None:
-        _MASTER_CACHE[ckey] = hit
-        return hit
-    p = load_table(spark, sf_dir, "part")
-    pk = F.col("p_partkey")
-    out = _master_projection(p, pk)
-    _MASTER_CACHE[ckey] = out
-    _bound_cache(_MASTER_CACHE)
-    return out
+    return memo(
+        "master",
+        spark,
+        (sf_dir,),
+        lambda: _master_projection(load_table(spark, sf_dir, "part"), F.col("p_partkey")),
+    )
 
 
 def _master_projection(p: DataFrame, pk) -> DataFrame:
@@ -433,16 +306,16 @@ ORACLES: dict[str, str] = {}
 
 def _strip_root_sort(df: DataFrame) -> DataFrame:
     """Drop a GLOBAL Sort sitting at the very ROOT of the plan — the
-    declared surface's presentation sort (see the declared_sort note:
-    the driver canonicalizes by sorting collected row tuples itself, so
-    the root Sort costs a range exchange per query and changes nothing
-    the recorder can observe). Only the root node is examined: a sort
+    declared surface's presentation sort. The oracle comparison
+    canonicalizes by sorting the collected row tuples itself
+    (scripts/check_oracle.py), so a root Sort costs a range exchange (a
+    boundary-sampling pass + a shuffle) per query and changes nothing
+    the comparison can observe. Only the root node is examined: a sort
     whose order IS consumed (orderBy().limit() top-k, window chains,
     anything followed by another operator) is never at the root and is
     never touched, so the surviving plan computes the same multiset of
-    rows by construction. scripts/sort_census.py verifies the registry:
-    0 root sorts with the flag unset, the identical 295-query list as
-    r12 with SPARK_GRAFT_SORTED_OUTPUT=1."""
+    rows by construction. scripts/sort_census.py lists the registered
+    queries whose root is still a Sort (expected: none)."""
     jqe = df._jdf.queryExecution()
     node = jqe.logical()
     if node.getClass().getSimpleName() != "Sort" or not getattr(node, "global")():
@@ -456,16 +329,16 @@ def _strip_root_sort(df: DataFrame) -> DataFrame:
 
 def query(name: str, oracle: str | None = None):
     """Register a declared query. The registered callable elides the
-    plan-root presentation Sort unless SPARK_GRAFT_SORTED_OUTPUT=1
-    (r13 VERDICT #8); the module-level function object stays unwrapped,
-    so operator tests that import a query function directly see the
-    exact sorted surface of r12."""
+    plan-root presentation Sort (see _strip_root_sort);
+    the module-level function object stays unwrapped, so operator tests
+    that import a query function directly see its declared sorted
+    surface."""
 
     def deco(fn):
         @functools.wraps(fn)
         def wrapped(spark, sf_dir, *a, **k):
             df = fn(spark, sf_dir, *a, **k)
-            if _SORTED_OUTPUT or not isinstance(df, DataFrame):
+            if not isinstance(df, DataFrame):
                 return df
             return _strip_root_sort(df)
 
@@ -1732,9 +1605,6 @@ def st3_streaming_sessions(spark, sf_dir):
     )
 
 
-_MEDIA_CACHE: dict = {}
-
-
 def _media(spark, sf_dir):
     """Synthetic media frame, memoized + lazily localCheckpoint-ed per
     (session, sf_dir): all seven mm queries consume the identical
@@ -1743,12 +1613,14 @@ def _media(spark, sf_dir):
     returns_frame). The checkpoint materializes on first action."""
     from market_data_pipeline_spark.operators import multimodal as mm
 
-    key = (spark, sf_dir)
-    if key not in _MEDIA_CACHE:
-        _MEDIA_CACHE[key] = mm.synthetic_media_from_docs(
+    return memo(
+        "media",
+        spark,
+        (sf_dir,),
+        lambda: mm.synthetic_media_from_docs(
             load_table(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=False)
-    return _MEDIA_CACHE[key]
+        ).localCheckpoint(eager=False),
+    )
 
 
 @query("mm1_image_stats")
@@ -2193,9 +2065,6 @@ QUARTER_ENDS = [
 ]
 
 
-_TS_SERIES_CACHE: dict = {}
-
-
 def _ts_series(spark, sf_dir):
     """Shared ts-family input: the RETURN_SYMBOLS price series with the
     fixed date/null filters. The PLAN is memoized per (session, sf_dir)
@@ -2206,18 +2075,15 @@ def _ts_series(spark, sf_dir):
     parquet footer), so execution re-scans parquet every time — only the
     plan-BUILD cost is shared."""
     ensure_session_defaults(spark)  # hit path skips price_frame's re-pin
-    _purge_dead_sessions(_TS_SERIES_CACHE)
-    key = (spark, sf_dir)
-    frame = _TS_SERIES_CACHE.pop(key, None)
-    if frame is None:
-        frame = price_frame(spark, sf_dir, symbols=RETURN_SYMBOLS).filter(
+
+    def build():
+        return price_frame(spark, sf_dir, symbols=RETURN_SYMBOLS).filter(
             F.col("close_price").isNotNull()
             & (F.col("trade_date") >= "1996-01-01")
             & (F.col("trade_date") <= "1998-12-31")
         ).select("symbol", "trade_date", "close_price")
-    _TS_SERIES_CACHE[key] = frame
-    _bound_cache(_TS_SERIES_CACHE)
-    return frame
+
+    return memo("ts_series", spark, (sf_dir,), build)
 
 
 @query(
@@ -3108,9 +2974,7 @@ def dd7_dup_clusters(spark, sf_dir):
     pairs = dedup.blocked_name_pairs(
         sup, block_col="s_nationkey", id_col="s_suppkey", name_col="s_name", max_dist=2
     )
-    return materialize_then_sort(
-        dedup.connected_components(pairs, "id_a", "id_b"), "node"
-    )
+    return dedup.connected_components(pairs, "id_a", "id_b")
 
 
 @query(
@@ -3326,10 +3190,7 @@ def dd8_dedup_corpus(spark, sf_dir):
     drop = cc.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("doc_id")
     )
-    return materialize_then_sort(
-        docs.join(drop, "doc_id", "left_anti").select("doc_id", "lang", "source"),
-        "doc_id",
-    )
+    return docs.join(drop, "doc_id", "left_anti").select("doc_id", "lang", "source")
 
 
 @query(
@@ -3392,10 +3253,7 @@ def dd8_capped_dedup_corpus(spark, sf_dir):
     drop = cc.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("doc_id")
     )
-    return materialize_then_sort(
-        docs.join(drop, "doc_id", "left_anti").select("doc_id", "lang", "source"),
-        "doc_id",
-    )
+    return docs.join(drop, "doc_id", "left_anti").select("doc_id", "lang", "source")
 
 
 @query(
@@ -3488,9 +3346,7 @@ def tx9_redact_pii(spark, sf_dir):
     """Regex PII scrubbing (emails, phone-shaped digit runs) — map-only
     codegen; the regexes are restricted to Java-regex ∩ RE2 syntax so the
     oracle executes the identical patterns."""
-    return materialize_then_sort(
-        tx.redact_pii(load_table(spark, sf_dir, "documents")), "doc_id"
-    )
+    return tx.redact_pii(load_table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -3512,12 +3368,8 @@ def ck1_chunk_documents(spark, sf_dir):
     """Context-length chunking: 64-token windows, 16-token overlap
     (stride 48) — the RAG/embedding ingestion reshape. Map-only
     posexplode; output rows ≈ tokens / stride."""
-    return materialize_then_sort(
-        tx.chunk_documents(
-            load_table(spark, sf_dir, "documents"), chunk_tokens=64, overlap=16
-        ),
-        "doc_id",
-        "chunk_idx",
+    return tx.chunk_documents(
+        load_table(spark, sf_dir, "documents"), chunk_tokens=64, overlap=16
     )
 
 
@@ -3702,9 +3554,7 @@ def tx10_repetition_stats(spark, sf_dir):
     Counter pass, no shuffle. A JVM higher-order-function form was measured
     and rejected as O(distinct x total) per document (quadratic in doc
     length); rationale in ``operators/text.py:351``."""
-    return materialize_then_sort(
-        tx.repetition_stats(load_table(spark, sf_dir, "documents")), "doc_id"
-    )
+    return tx.repetition_stats(load_table(spark, sf_dir, "documents"))
 
 
 # --- SHF1: deterministic global shuffle-shard --------------------------------
@@ -3886,7 +3736,6 @@ def dd11_incremental_dedup(spark, sf_dir):
     return (
         dedup.incremental_dedup(new_batch, seen, fingerprint_col=head_fp)
         .select("doc_id", "lang", "source", "n_chars")
-        .transform(lambda d: materialize_then_sort(d, "doc_id"))
     )
 
 
@@ -5295,11 +5144,7 @@ def smp5_negative_sampling(spark, sf_dir):
     per anchor over a range-partitioned exact rank (ids not assumed
     dense; no single-task window); self-draws shift to the next rank —
     see operators.text.negative_sampling."""
-    return materialize_then_sort(
-        tx.negative_sampling(load_table(spark, sf_dir, "documents"), k=4),
-        "doc_id",
-        "neg_idx",
-    )
+    return tx.negative_sampling(load_table(spark, sf_dir, "documents"), k=4)
 
 
 @query(
@@ -5755,9 +5600,7 @@ def tx14_sentence_stats(spark, sf_dir):
     per sentence) — map-only higher-order expressions, no shuffle; the
     average is an exact integer ratio. See
     operators.text.sentence_stats."""
-    return materialize_then_sort(
-        tx.sentence_stats(load_table(spark, sf_dir, "documents")), "doc_id"
-    )
+    return tx.sentence_stats(load_table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -5935,11 +5778,8 @@ def dq3_childless_orders(spark, sf_dir):
     keys = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o_orderkey")
     )
-    return materialize_then_sort(
-        o.join(keys, "o_orderkey", "left_anti").select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-        ),
-        "o_orderkey",
+    return o.join(keys, "o_orderkey", "left_anti").select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
 
 
@@ -6145,12 +5985,8 @@ def k8_radius_search(spark, sf_dir):
     fixed k): broadcast queries, one corpus scan, map-side filter — no
     shuffle after the scan. See operators.similarity.radius_search."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return materialize_then_sort(
-        similarity.radius_search(
-            emb, emb.filter(F.col("vec_id").isin(0, 1, 2)), threshold=0.15
-        ),
-        "query_id",
-        "vec_id",
+    return similarity.radius_search(
+        emb, emb.filter(F.col("vec_id").isin(0, 1, 2)), threshold=0.15
     )
 
 
@@ -6334,10 +6170,7 @@ def tx16_quality_gate(spark, sf_dir):
     auditable form of a pretraining filter; the reasons string is what
     a data-quality dashboard aggregates). Map-only, split staged once.
     See operators.text.quality_gate."""
-    return materialize_then_sort(
-        tx.quality_gate(load_table(spark, sf_dir, "documents")),
-        "doc_id"
-    )
+    return tx.quality_gate(load_table(spark, sf_dir, "documents"))
 
 
 # ===========================================================================
@@ -7394,7 +7227,7 @@ def tx18_charset_stats(spark, sf_dir):
     share. Map-only JVM regex counting, fully codegen'd. See
     operators.text.charset_stats."""
     docs = load_table(spark, sf_dir, "documents")
-    return materialize_then_sort(tx.charset_stats(docs), "doc_id")
+    return tx.charset_stats(docs)
 
 
 # ===========================================================================
@@ -8060,7 +7893,7 @@ def tx20_lexical_diversity(spark, sf_dir):
             F.size("_t") > 0,
             F.round(F.size(F.array_distinct("_t")) * 1.0 / F.size("_t"), 6),
         ).alias("ttr"),
-    ).transform(lambda d: materialize_then_sort(d, "doc_id"))
+    )
 
 
 @query(
@@ -9165,7 +8998,6 @@ def tx22_keyword_in_context(spark, sf_dir):
             F.col("pos").cast("long").alias("pos"),
             F.concat_ws(" ", F.slice("_t", lo, n)).alias("context"),
         )
-        .transform(lambda d: materialize_then_sort(d, "doc_id"))
     )
 
 

@@ -1,4 +1,5 @@
-"""SparkSession factory.
+"""SparkSession factory, and the session-scoped memo (:func:`memo`) that
+holds the read path's staged frames, plans and parquet schemas.
 
 Defaults chosen for correctness-vs-oracle and 100 TB-scale discipline:
 
@@ -17,10 +18,12 @@ Defaults chosen for correctness-vs-oracle and 100 TB-scale discipline:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_T = TypeVar("_T")
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -62,7 +65,7 @@ def get_spark(
     routes through. Don't bypass ``load_table`` with a raw
     ``spark.read.parquet`` in query code.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     _export_pythonpath()
     builder = (
         SparkSession.builder.appName(app_name)
@@ -77,7 +80,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         # Parquet writer defaults: snappy is the read-speed sweet spot; at
         # 100 TB switch to zstd for colder data via table properties.
@@ -123,3 +126,71 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# (kind, session, *key) -> (stamp, value), least recently used first.
+_MEMO: dict = {}
+
+
+def _stopped(spark) -> bool:
+    try:
+        return spark.sparkContext._jsc is None
+    except Exception:
+        return True
+
+
+def memo(
+    kind: str,
+    spark: SparkSession,
+    key: tuple,
+    build: Callable[[], _T],
+    *,
+    stamp=None,
+    cap: int | None = 4,
+) -> _T:
+    """Session-scoped memo of staged frames, plans and parquet schemas.
+
+    Returns the value stored under ``(kind, spark, *key)`` when its stamp
+    equals ``stamp`` (refreshing its LRU recency); otherwise calls
+    ``build()``, stores the result and evicts the least recently used
+    entries of this ``(kind, spark)`` above ``cap`` (``None``: unbounded).
+
+    Entries of stopped sessions are dropped BEFORE the lookup: a dead
+    entry must never be served, and a process that creates several
+    sessions over its lifetime (test harnesses, in-process session
+    restarts) must not accumulate their checkpointed frames. The bound is
+    per session so one session's churn never evicts another live
+    session's hot frame.
+
+    Eviction releases only the Python reference, deliberately: Spark's
+    ContextCleaner unpersists the blocks of an evicted localCheckpoint on
+    the next JVM GC (``spark.cleaner.periodicGC.interval``), and only
+    once nothing still points at them — a forced unpersist could free
+    blocks that back an unmaterialized dependent frame.
+    """
+    for k in [k for k in _MEMO if _stopped(k[1])]:
+        del _MEMO[k]
+    full = (kind, spark, *key)
+    hit = _MEMO.pop(full, None)
+    if hit is not None and hit[0] == stamp:
+        _MEMO[full] = hit
+        return hit[1]
+    value = build()
+    _MEMO[full] = (stamp, value)
+    if cap is not None:
+        mine = [k for k in _MEMO if k[0] == kind and k[1] is spark]
+        for k in mine[: max(0, len(mine) - cap)]:
+            del _MEMO[k]
+    return value
+
+
+def clear_frame_caches() -> None:
+    """Drop every memo entry. The memos assume the source tables under a
+    given (session, directory) are immutable between calls (true for the
+    oracle gate, the benchmark and the sweeps, where each adversarial
+    clone gets its own directory); a caller that rewrites a table it
+    already queried — the property tests rewrite a tmp_path table between
+    hypothesis examples — must call this, or a staged frame of the old
+    data is served. Dropping the references is the whole release (see
+    :func:`memo`)."""
+    _MEMO.clear()

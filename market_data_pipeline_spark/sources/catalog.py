@@ -13,6 +13,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from market_data_pipeline_spark.session import memo
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 TABLE_NAMES = (
@@ -107,37 +109,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # the normalization plan is a pure function of the relation
         # (same session, same file version -> same lazy plan); memoize it
-        # next to the relation so the ~100 event-family queries skip the
-        # dtypes probe + withColumn round trips per call (r12, guide §1.2)
-        hit = _NORM_CACHE.get((spark, path))
-        if hit is not None and hit[1] is df:
-            return hit[0]
-        norm = normalize_event_ts(df)
-        _NORM_CACHE[(spark, path)] = (norm, df)
-        return norm
+        # stamped with the relation, so the ~100 event-family queries skip
+        # the dtypes probe + withColumn round trips per call and a re-read
+        # file version re-normalizes
+        return memo(
+            "events", spark, (path,), lambda: normalize_event_ts(df), stamp=df, cap=None
+        )
     return df
-
-
-# (session, path) -> (stat_key, DataFrame). Bounded: one entry per distinct
-# driver table file per session; stale keys (old stat) are evicted on the
-# miss that replaces them; entries of stopped sessions are purged before
-# every lookup (the frame-cache pattern from plans.driver_queries).
-_SCHEMA_CACHE: dict = {}
-# (session, path) -> (normalized events DataFrame, the relation it wraps).
-# Validated by relation IDENTITY against _SCHEMA_CACHE's current entry, so
-# a re-resolved file version (new relation object) re-normalizes.
-_NORM_CACHE: dict = {}
-
-
-def _purge_dead_sessions(cache: dict) -> None:
-    for key in list(cache):
-        sess = key[0]
-        try:
-            dead = sess.sparkContext._jsc is None
-        except Exception:
-            dead = True
-        if dead:
-            del cache[key]
 
 
 def read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
@@ -158,20 +136,18 @@ def read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
     partition rewrites create/remove entries in it) re-resolves."""
     try:
         st = os.stat(path)
-        stat_key = (st.st_mtime_ns, st.st_size)
     except OSError:
         # nonexistent / raced path: fall through to the plain reader so
         # the error surfaces exactly as before
         return spark.read.parquet(path)
-    _purge_dead_sessions(_SCHEMA_CACHE)
-    _purge_dead_sessions(_NORM_CACHE)
-    key = (spark, path)
-    hit = _SCHEMA_CACHE.get(key)
-    if hit is not None and hit[0] == stat_key:
-        return hit[1]
-    df = spark.read.parquet(path)
-    _SCHEMA_CACHE[key] = (stat_key, df)
-    return df
+    return memo(
+        "schema",
+        spark,
+        (path,),
+        lambda: spark.read.parquet(path),
+        stamp=(st.st_mtime_ns, st.st_size),
+        cap=None,
+    )
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

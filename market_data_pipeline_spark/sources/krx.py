@@ -29,6 +29,7 @@ from collections.abc import Callable
 from html.parser import HTMLParser
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from market_data_pipeline_spark.schemas import RAW_DELISTED, RAW_NEW_LISTING
 
@@ -74,6 +75,8 @@ NEW_LISTING_RENAME = {
 }
 
 MARKETS = ("KOSPI", "KOSDAQ", "KONEX")
+# the export form's marketType value per market
+_MARKET_TYPES = {"KOSPI": "stockMkt", "KOSDAQ": "kosdaqMkt", "KONEX": "konexMkt"}
 
 
 def decode_krx_bytes(data: bytes) -> str:
@@ -196,28 +199,30 @@ def _rows_to_df(
     return spark.createDataFrame(out_rows, schema)
 
 
-class KrxDelistedSource:
-    """S1+S3 — delisted-company source. ``transport(url, form) -> bytes``
-    is injectable; the default does the real 2-POST protocol."""
+class _KrxSource:
+    """One KRX export crawl per market (S3): POST the market's form, parse
+    the export's data table, map it onto the RAW_* ``schema``; then union
+    the markets and drop duplicate rows on ``dedup_keys``.
+    ``transport(url, form) -> bytes`` is injectable; the default does the
+    real 2-POST protocol."""
+
+    url: str
+    rename: dict[str, str]
+    schema: StructType
+    dedup_keys: list[str]
+    form_fields: dict[str, str]
 
     def __init__(self, spark: SparkSession, transport: Transport | None = None):
         self.spark = spark
         self.transport = transport or _requests_transport(BROWSER_HEADERS)
 
     def form(self, market: str) -> dict:
-        return {
-            "marketType": {"KOSPI": "stockMkt", "KOSDAQ": "kosdaqMkt", "KONEX": "konexMkt"}[
-                market
-            ],
-            "searchType": "delisted",
-        }
+        return {"marketType": _MARKET_TYPES[market], **self.form_fields}
 
     def fetch_market(self, market: str) -> DataFrame:
-        body = self.transport(SEARCH_URL, self.form(market))
+        body = self.transport(self.url, self.form(market))
         header, rows = parse_html_table(decode_krx_bytes(body))
-        return _rows_to_df(
-            self.spark, header, rows, DELISTED_RENAME, RAW_DELISTED, market
-        )
+        return _rows_to_df(self.spark, header, rows, self.rename, self.schema, market)
 
     def fetch_all(self, markets=MARKETS) -> DataFrame:
         """Per-market fetch + union-by-name; a failing market is skipped
@@ -230,50 +235,33 @@ class KrxDelistedSource:
             except Exception:
                 continue
         if not frames:
-            return self.spark.createDataFrame([], RAW_DELISTED)
+            return self.spark.createDataFrame([], self.schema)
         out = frames[0]
         for f in frames[1:]:
             out = out.unionByName(f)
-        return out.dropDuplicates(["company_code", "delisting_date"])
+        return out.dropDuplicates(self.dedup_keys)
 
 
-class KrxNewListingSource:
+class KrxDelistedSource(_KrxSource):
+    """S1+S3 — delisted-company source."""
+
+    url = SEARCH_URL
+    rename = DELISTED_RENAME
+    schema = RAW_DELISTED
+    dedup_keys = ["company_code", "delisting_date"]
+    form_fields = {"searchType": "delisted"}
+
+
+class KrxNewListingSource(_KrxSource):
     """S2+S3 — new-listing source with market + listing-type flags
     (NEW/TRANSFER/RELIST; reference:
     src/crawlers/krx_new_listing_crawler.py:60-162)."""
 
-    def __init__(self, spark: SparkSession, transport: Transport | None = None):
-        self.spark = spark
-        self.transport = transport or _requests_transport(BROWSER_HEADERS)
-
-    def form(self, market: str, listing_types=("NEW", "TRANSFER", "RELIST")) -> dict:
-        return {
-            "marketType": {"KOSPI": "stockMkt", "KOSDAQ": "kosdaqMkt", "KONEX": "konexMkt"}[
-                market
-            ],
-            "listingTypes": ",".join(listing_types),
-        }
-
-    def fetch_market(self, market: str) -> DataFrame:
-        body = self.transport(LISTING_URL, self.form(market))
-        header, rows = parse_html_table(decode_krx_bytes(body))
-        return _rows_to_df(
-            self.spark, header, rows, NEW_LISTING_RENAME, RAW_NEW_LISTING, market
-        )
-
-    def fetch_all(self, markets=MARKETS) -> DataFrame:
-        frames = []
-        for m in markets:
-            try:
-                frames.append(self.fetch_market(m))
-            except Exception:
-                continue
-        if not frames:
-            return self.spark.createDataFrame([], RAW_NEW_LISTING)
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out.dropDuplicates(["company_code", "listing_date"])
+    url = LISTING_URL
+    rename = NEW_LISTING_RENAME
+    schema = RAW_NEW_LISTING
+    dedup_keys = ["company_code", "listing_date"]
+    form_fields = {"listingTypes": "NEW,TRANSFER,RELIST"}
 
 
 def backup_parquet(

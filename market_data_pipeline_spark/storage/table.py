@@ -31,6 +31,15 @@ from pyspark.sql import functions as F
 from market_data_pipeline_spark.operators.upsert import dedup_latest, insert_if_absent
 
 
+def _link_or_copy(src: str, dst: str) -> None:
+    """Hard-link ``src`` to ``dst`` (metadata-only), copying where the
+    filesystem cannot link (cross-device, no hard links)."""
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copy2(src, dst)
+
+
 class ParquetTable:
     """A keyed, optionally version-deduped, optionally partitioned parquet
     table."""
@@ -77,6 +86,33 @@ class ParquetTable:
             writer = writer.partitionBy(self.partition_col)
         writer.parquet(path or self.path)
 
+    def _stage_and_swap(self, target: str, fill) -> None:
+        """Replace the directory ``target`` with what ``fill(tmp)`` writes
+        into a sibling staging directory: ``fill``'s lineage may read from
+        ``target`` itself (read-modify-write is the standard mutation
+        idiom here), and Spark cannot overwrite a directory it is still
+        scanning. Local FS rename is atomic; on an object store this would
+        be a staged prefix + pointer swap (or a table format like
+        Delta/Iceberg)."""
+        tmp = target.rstrip("/") + ".stage.tmp"
+        shutil.rmtree(tmp, ignore_errors=True)
+        fill(tmp)
+        shutil.rmtree(target, ignore_errors=True)
+        os.rename(tmp, target)
+        # drop Spark's cached file listing for this path — later reads in
+        # the same session would otherwise reference the replaced part
+        # files (FAILED_READ_FILE.FILE_NOT_EXIST)
+        self.spark.catalog.refreshByPath(self.path)
+
+    def _rows(self, df: DataFrame, current: bool) -> DataFrame:
+        """A scan of this table's layout without the partition column;
+        with ``current``, only the latest version per key."""
+        if self.partition_col:
+            df = df.drop(self.partition_col)
+        if current and self.version_col:
+            df = dedup_latest(df, self.key, self.version_col)
+        return df
+
     # -- reads ----------------------------------------------------------
     def read_raw(self) -> DataFrame:
         """All row versions, no dedup.
@@ -92,33 +128,22 @@ class ParquetTable:
             read_parquet_cached_schema,
         )
 
-        df = read_parquet_cached_schema(self.spark, self.path)
-        return df.drop(self.partition_col) if self.partition_col else df
+        return self._rows(
+            read_parquet_cached_schema(self.spark, self.path), current=False
+        )
 
     def read_current(self) -> DataFrame:
         """Latest version per key — ReplacingMergeTree SELECT...FINAL
         semantics."""
-        df = self.read_raw()
-        if self.version_col:
-            df = dedup_latest(df, self.key, self.version_col)
-        return df
+        return self._rows(self.read_raw(), current=True)
 
     # -- mutations ------------------------------------------------------
     def overwrite(self, df: DataFrame) -> None:
-        """Stage-and-swap: ``df``'s lineage may read from this table's own
-        path (read-modify-overwrite is the standard mutation idiom here),
-        and Spark cannot overwrite a directory it is still scanning. Local
-        FS rename is atomic; on an object store this would be a staged
-        prefix + pointer swap (or a table format like Delta/Iceberg)."""
-        tmp = self.path.rstrip("/") + ".stage.tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        self._write(df, "overwrite", path=tmp)
-        shutil.rmtree(self.path, ignore_errors=True)
-        os.rename(tmp, self.path)
-        # drop Spark's cached file listing for this path — later reads in
-        # the same session would otherwise reference the replaced part
-        # files (FAILED_READ_FILE.FILE_NOT_EXIST)
-        self.spark.catalog.refreshByPath(self.path)
+        """Replace the whole table with ``df`` (stage-and-swap, so ``df``
+        may read from this table)."""
+        self._stage_and_swap(
+            self.path, lambda tmp: self._write(df, "overwrite", path=tmp)
+        )
 
     def append(self, df: DataFrame) -> None:
         self._write(df, "append")
@@ -217,12 +242,8 @@ class ParquetTable:
         ``transform(df) -> df`` (df excludes the partition column)."""
         pdir = os.path.join(self.path, f"{self.partition_col}={value}")
         out = transform(self.spark.read.parquet(pdir))
-        tmp = pdir + ".stage.tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        out.sortWithinPartitions(*self.sort_cols).write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(pdir)
-        os.rename(tmp, pdir)
-        self.spark.catalog.refreshByPath(self.path)
+        out = out.sortWithinPartitions(*self.sort_cols)
+        self._stage_and_swap(pdir, lambda tmp: out.write.mode("overwrite").parquet(tmp))
 
     def compact(
         self, partitions: list[str] | None = None, max_concurrency: int = 1
@@ -347,14 +368,7 @@ class ParquetTable:
         if os.path.exists(dst):
             raise FileExistsError(f"snapshot {tag!r} already exists")
         os.makedirs(os.path.dirname(dst), exist_ok=True)
-
-        def _link(src: str, d: str) -> None:
-            try:
-                os.link(src, d)
-            except OSError:  # cross-device / FS without hard links
-                shutil.copy2(src, d)
-
-        shutil.copytree(self.path, dst, copy_function=_link)
+        shutil.copytree(self.path, dst, copy_function=_link_or_copy)
         return dst
 
     def snapshots(self) -> list[str]:
@@ -369,12 +383,7 @@ class ParquetTable:
         dst = self._snapshot_dir(tag)
         if not os.path.isdir(dst):
             raise FileNotFoundError(f"no snapshot {tag!r} for {self.path}")
-        df = self.spark.read.parquet(dst)
-        if self.partition_col:
-            df = df.drop(self.partition_col)
-        if self.version_col:
-            df = dedup_latest(df, self.key, self.version_col)
-        return df
+        return self._rows(self.spark.read.parquet(dst), current=True)
 
     def restore(self, tag: str) -> None:
         """Roll the live table back to a snapshot via the same atomic
@@ -383,19 +392,10 @@ class ParquetTable:
         dst = self._snapshot_dir(tag)
         if not os.path.isdir(dst):
             raise FileNotFoundError(f"no snapshot {tag!r} for {self.path}")
-        tmp = self.path.rstrip("/") + ".stage.tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-
-        def _link(src: str, d: str) -> None:
-            try:
-                os.link(src, d)
-            except OSError:
-                shutil.copy2(src, d)
-
-        shutil.copytree(dst, tmp, copy_function=_link)
-        shutil.rmtree(self.path, ignore_errors=True)
-        os.rename(tmp, self.path)
-        self.spark.catalog.refreshByPath(self.path)
+        self._stage_and_swap(
+            self.path,
+            lambda tmp: shutil.copytree(dst, tmp, copy_function=_link_or_copy),
+        )
 
     def drop_snapshot(self, tag: str) -> None:
         dst = self._snapshot_dir(tag)

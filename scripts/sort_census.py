@@ -5,10 +5,10 @@ itself before comparing/hashing (scripts/check_oracle.py is the
 replica), so the closing sort buys determinism nobody consumes and
 costs a range-exchange (sampling pass + shuffle) per query.
 
-Prints one line per query: name, whether the analyzed plan's root is
-Sort[global], and the sort keys. Run before and after the
-declared_sort conversion; the after-run must list zero root sorts with
-SPARK_GRAFT_SORTED_OUTPUT unset and the same set as before with it =1.
+Prints one line per query whose analyzed plan's root is Sort[global],
+with its sort keys. The registry's ``query`` decorator elides that root
+sort from every registered query, so the census of ``queries()`` must
+list zero root sorts; the unwrapped module functions keep theirs.
 
 Usage: python scripts/sort_census.py [sf_dir] [name ...]
 """

@@ -148,14 +148,14 @@ def test_kmeans_lloyd_exact_null_ragged_golden(spark):
     assert got == [(0, (2.6666666666666665,)), (1, (0.75, None))]
 
 
-def test_root_sort_elision_contract(spark, monkeypatch):
+def test_root_sort_elision_contract(spark):
     """r13 VERDICT #8: registered queries drop their ROOT presentation
-    Sort by default (the driver's recorder sorts collected row tuples
-    itself), keep it with SPARK_GRAFT_SORTED_OUTPUT=1, and the two
-    surfaces return the same multiset of rows."""
+    Sort (the oracle comparison sorts collected row tuples itself), the
+    unwrapped module function keeps it, and the two return the same
+    multiset of rows."""
     import market_data_pipeline_spark.plans.driver_queries as DQ
 
-    name = "a1_market_summary"  # ends in a root sort in the r12 surface
+    name = "a1_market_summary"  # its declared surface ends in a root sort
 
     def root(df):
         node = df._jdf.queryExecution().logical()
@@ -165,9 +165,7 @@ def test_root_sort_elision_contract(spark, monkeypatch):
     plain = DQ.QUERIES[name](spark, SF_DIR)
     assert root(plain) != "Sort"
 
-    monkeypatch.setattr(DQ, "_SORTED_OUTPUT", True)
-    DQ.clear_frame_caches()
-    sorted_df = DQ.QUERIES[name](spark, SF_DIR)
+    sorted_df = DQ.a1_market_summary(spark, SF_DIR)
     assert root(sorted_df) == "Sort"
 
     a = sorted(map(str, plain.collect()))

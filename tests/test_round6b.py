@@ -1074,14 +1074,30 @@ def test_listing_age_vol_buckets(spark, tmp_path):
     assert old["avg_abs_ret"] == pytest.approx(0.01, abs=1e-6)
 
 
+class _DeadSess:
+    """Stands in for a stopped SparkSession in the session memo."""
+
+    class _SC:
+        _jsc = None
+
+    sparkContext = _SC()
+
+
 def test_frame_cache_bounded_per_session(spark, sf_dir):
     """r10 advice: one long-lived session touching many sf_dirs (sweep
     clones, tmp_path tests) must not accumulate a checkpointed price
-    frame per directory — the cache keeps only the newest
-    _FRAME_CACHE_MAX_DIRS entries and releases evicted frames' blocks.
-    Path variants of the same directory are distinct cache keys, so no
-    data copies are needed to simulate many directories."""
+    frame per directory — the session memo keeps only the newest
+    ``cap`` (default 4) staged frames per session and kind, and releases
+    evicted frames' blocks. Path variants of the same directory are
+    distinct memo keys, so no data copies are needed to simulate many
+    directories."""
+    from market_data_pipeline_spark import session as S
     from market_data_pipeline_spark.plans import driver_queries as dq
+
+    cap = 4  # memo's default per-session bound for staged frames
+
+    def staged():
+        return [k[2] for k in S._MEMO if k[0] == "price" and k[1] is spark]
 
     dq.clear_frame_caches()
     variants = [
@@ -1094,27 +1110,41 @@ def test_frame_cache_bounded_per_session(spark, sf_dir):
     ]
     for v in variants:
         dq.price_frame(spark, v).limit(1).count()  # materialize each
-    assert len(dq._PRICE_CACHE) == dq._FRAME_CACHE_MAX_DIRS
+    assert len(staged()) == cap
     # the SURVIVORS are the most recently USED dirs, and still compute
-    kept = [k[1] for k in dq._PRICE_CACHE]
-    assert kept == variants[-dq._FRAME_CACHE_MAX_DIRS:]
+    assert staged() == variants[-cap:]
     assert dq.price_frame(spark, variants[-1]).count() > 0
     # an evicted dir re-stages transparently on next request
     assert dq.price_frame(spark, variants[0]).count() > 0
     # LRU, not FIFO (r11 review): re-touching the eldest survivor
     # refreshes it, so the NEXT eviction takes a different key
-    eldest = [k[1] for k in dq._PRICE_CACHE][0]
+    eldest = staged()[0]
     dq.price_frame(spark, eldest).limit(1).count()  # refresh
     dq.price_frame(spark, variants[1]).limit(1).count()  # insert -> evict
-    assert (spark, eldest) in dq._PRICE_CACHE
+    assert eldest in staged()
     # a dead-session entry purges without disturbing live ones, and a
     # live hit right after a purge must not KeyError (r11 review: the
     # post-lookup purge deleted the entry being returned)
-    class _DeadSess:
-        class _SC:
-            _jsc = None
-        sparkContext = _SC()
-    dq._PRICE_CACHE[(_DeadSess(), "/nowhere")] = None
+    S._MEMO[("price", _DeadSess(), "/nowhere")] = (None, None)
     assert dq.price_frame(spark, eldest).count() > 0
-    assert not any(k[1] == "/nowhere" for k in dq._PRICE_CACHE)
+    assert not any(k[2] == "/nowhere" for k in S._MEMO)
+    dq.clear_frame_caches()
+
+
+def test_media_memo_clears_and_purges(spark, sf_dir):
+    """The synthetic media frame shares the session memo's policy:
+    clear_frame_caches drops it, and a stopped session's media entry is
+    purged on the next memo lookup."""
+    from market_data_pipeline_spark import session as S
+    from market_data_pipeline_spark.plans import driver_queries as dq
+
+    dq.clear_frame_caches()
+    m1 = dq._media(spark, sf_dir)
+    assert dq._media(spark, sf_dir) is m1
+    dq.clear_frame_caches()
+    assert dq._media(spark, sf_dir) is not m1
+
+    S._MEMO[("media", _DeadSess(), "/nowhere")] = (None, None)
+    assert dq._media(spark, sf_dir) is not None
+    assert not any(k[2] == "/nowhere" for k in S._MEMO)
     dq.clear_frame_caches()
